@@ -16,19 +16,33 @@ under the reference's directory contract via SavepointManager.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.ml import Pipeline, PipelineModel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.ml.feature import RegexTokenizer, StringIndexerModel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flashml_spark.metrics.binary import auroc, best_fbeta_threshold
 from flashml_spark.metrics.multiclass import multiclass_metrics
 from flashml_spark.operators import relational, sampling
+from flashml_spark.operators.binning import (
+    BinningEstimator,
+    binning_output_name,
+    binning_specs_for_page,
+    resolve_binned_roles,
+)
 from flashml_spark.training.estimators import (
     build_estimator,
     build_label_indexer,
     strip_training_summary,
+)
+from flashml_spark.training.platt import PlattScalar, PlattScalarModel
+from flashml_spark.training.postprocess import (
+    index_to_string,
+    top_k_intents,
+    uplift_transform,
 )
 from flashml_spark.vectorization import build_assembler, build_text_vectorizer
 
@@ -183,12 +197,6 @@ class Experiment:
         # feature generation: binning first — binned variables leave the
         # numerical list and their page-qualified outputs join the
         # categorical list (ConfigValues.scala:104-119,380-430)
-        from flashml_spark.operators.binning import (
-            BinningEstimator,
-            binning_specs_for_page,
-            resolve_binned_roles,
-        )
-
         bin_specs = binning_specs_for_page(c.binning, page)
         numerical_cols, categorical_cols, renames = resolve_binned_roles(
             c.numerical_cols, c.categorical_cols, bin_specs, page + 1
@@ -227,27 +235,18 @@ class Experiment:
                 stages.extend(chain_stages)
 
         for col in c.text_cols:
+            toks, tokenized = col, False
             if col in prep_chains:
-                chain_stages, final_col, tokenized = prep_chains[col]
+                chain_stages, toks, tokenized = prep_chains[col]
                 stages.extend(chain_stages)
-                toks = final_col
-                if not tokenized:
-                    toks = f"{col}__toks"
-                    stages.append(
-                        __import__(
-                            "pyspark.ml.feature", fromlist=["RegexTokenizer"]
-                        ).RegexTokenizer(
-                            inputCol=final_col, outputCol=toks,
-                            pattern=r"\s+", toLowercase=True,
-                        )
-                    )
-            else:
-                toks = f"{col}__toks"
+            if not tokenized:
                 stages.append(
-                    __import__("pyspark.ml.feature", fromlist=["RegexTokenizer"]).RegexTokenizer(
-                        inputCol=col, outputCol=toks, pattern=r"\s+", toLowercase=True
+                    RegexTokenizer(
+                        inputCol=toks, outputCol=f"{col}__toks",
+                        pattern=r"\s+", toLowercase=True,
                     )
                 )
+                toks = f"{col}__toks"
             vec = f"{col}__vec"
             stages.extend(build_text_vectorizer(c.text_method, toks, vec, c.slots))
             feature_vec_cols.append(vec)
@@ -391,6 +390,81 @@ class Experiment:
                 return list(stage.labels)
         return None
 
+    # ---- page fan-out and the shared scoring chain -----------------------
+    @property
+    def n_pages(self) -> int:
+        """Page models per run: ``num_pages`` when ``page_col`` is set."""
+        c = self.config
+        return c.num_pages if (c.page_col and c.num_pages > 1) else 1
+
+    def _split_pages(self, df: DataFrame) -> list[DataFrame]:
+        if self.n_pages > 1:
+            return relational.split_page_level(df, self.config.page_col, self.n_pages)
+        return [df]
+
+    @staticmethod
+    def _map_pages(fn, items: list) -> list:
+        """``[fn(x) for x in items]``, overlapped from a small thread pool
+        (guide §2.6 "overlap independent jobs"): page fits and sweeps
+        touch only their own page frames and paths, so later pages' jobs
+        back-fill the cores an earlier page's straggling stages leave idle.
+        The pool changes WHEN jobs run, not what they compute; order is
+        kept."""
+        if len(items) < 2:
+            return [fn(x) for x in items]
+        with ThreadPoolExecutor(max_workers=min(len(items), 4)) as pool:
+            return list(pool.map(fn, items))
+
+    @staticmethod
+    def _positive_probability(scored: DataFrame) -> Column:
+        """P(class 1): ``probability`` is a vector from Spark classifiers,
+        ``array<double>`` from Platt and uplift."""
+        if dict(scored.dtypes)["probability"] == "vector":
+            from pyspark.ml.functions import vector_to_array
+
+            return vector_to_array("probability").getItem(1)
+        return F.element_at(F.col("probability"), 2)
+
+    def _binary_scores(self, scored: DataFrame, label_col: str) -> DataFrame:
+        """The (positive_probability, label) frame the binary metrics read."""
+        return scored.select(
+            self._positive_probability(scored).alias("positive_probability"),
+            F.col(label_col).alias("label"),
+        )
+
+    def _score_page(self, k: int, scored: DataFrame, pipeline: PipelineModel) -> DataFrame:
+        """The post-model chain that ``run`` and ``predict`` share, so a
+        predict-only run scores exactly as training scored its test split
+        (``PipelineSteps.scala:73-78``): page k's ``scored`` frame (the
+        output of ``pipeline``'s model tail) → [Uplift] → [TopK] →
+        [IndexToString] → drop binned intermediates → post-predict filter."""
+        c = self.config
+        labels = self._indexer_labels(pipeline)
+        if c.uplift_treatment:
+            # the bare classifier stage: last stage, or the one before the
+            # Platt calibrator when the tail is calibrated (the calibrator
+            # is then ALSO the margin->probability map the counterfactual
+            # scorings need)
+            model_stage, cal = pipeline.stages[-2:]
+            if not isinstance(cal, PlattScalarModel):
+                model_stage, cal = cal, None
+            scored = uplift_transform(scored, model_stage, calibrator=cal)
+        if c.top_k and labels:
+            scored = top_k_intents(scored, labels, k=c.top_k)
+        if labels:
+            scored = index_to_string(scored, labels)
+        if c.binning:
+            # per-page binned columns are page-qualified intermediates
+            # (<var>_page<k>_binned) — drop before the cross-page union,
+            # which unions by name
+            scored = scored.drop(
+                *[
+                    binning_output_name(s["variable"], k + 1)
+                    for s in binning_specs_for_page(c.binning, k)
+                ]
+            )
+        return relational.post_predict_filter(scored, c.post_predict_filter)
+
     # ---- lifecycle -------------------------------------------------------
     _RESUME_STEPS = ("sampling", "vectorization", "modelling")
 
@@ -458,20 +532,13 @@ class Experiment:
         elif resume_from == "vectorization":
             train, test = sp.load("sampling", "train"), sp.load("sampling", "test")
 
-        n_pages = c.num_pages if (c.page_col and c.num_pages > 1) else 1
         if resume_from == "modelling":
-            train_pages = test_pages = [None] * n_pages
-        elif n_pages > 1:
-            train_pages = relational.split_page_level(train, c.page_col, c.num_pages)
-            test_pages = relational.split_page_level(test, c.page_col, c.num_pages)
+            train_pages = test_pages = [None] * self.n_pages
         else:
-            train_pages, test_pages = [train], [test]
+            train_pages, test_pages = self._split_pages(train), self._split_pages(test)
 
-        scored_pages = []
-        self.models_ = []
-        self.tuning_ = []
-
-        def _run_page(k, tr, te):
+        def _run_page(args):
+            k, (tr, te) = args
             if resume_from == "modelling":
                 prep = PipelineModel.load(
                     f"{c.savepoint_root}/pipeline/page{k}/prep_pipeline"
@@ -499,54 +566,19 @@ class Experiment:
                     te = sp.load("vectorization", "test", page=k)
                 tr_v = tr_v.persist()
             model, tuning_info = self._fit_model(tr_v, label_col, page=k)
-            labels = self._indexer_labels(prep)
-
-            te_v = te  # already vectorized (fresh transform or savepoint)
-            scored = model.transform(te_v)
             tail = [model]
-            calibrator = None
             if use_platt:
-                from flashml_spark.training.platt import PlattScalar
-
-                calibrator = PlattScalar(label_col=label_col).fit(model.transform(tr_v))
-                scored = calibrator.transform(scored)
                 # the calibrator is part of the persisted pipeline so that
                 # predict-only resume reproduces calibrated probabilities
                 # (reference: OneVsRestCustomModel + PlattScalar are both
                 # MLWritable pipeline stages, loaded by
                 # ModelTrainingEngine.loadPipelineArray:109-118)
-                tail.append(calibrator)
+                tail.append(PlattScalar(label_col=label_col).fit(model.transform(tr_v)))
             full_model = PipelineModel(prep.stages + tail)
-            if c.uplift_treatment:
-                from flashml_spark.training.postprocess import uplift_transform
-
-                scored = uplift_transform(scored, model, calibrator=calibrator)
-            if c.top_k and labels:
-                from flashml_spark.training.postprocess import top_k_intents
-
-                scored = top_k_intents(scored, labels, k=c.top_k)
-            if labels:
-                from flashml_spark.training.postprocess import index_to_string
-
-                scored = index_to_string(scored, labels)
+            # te is already vectorized (fresh transform or savepoint): only
+            # the model tail scores it
+            scored = self._score_page(k, PipelineModel(tail).transform(te), full_model)
             tr_v.unpersist()
-
-            scored = relational.post_predict_filter(scored, c.post_predict_filter)
-            if c.binning:
-                # per-page binned columns are page-qualified intermediates
-                # (<var>_page<k>_binned) — drop before the cross-page union,
-                # which unions by name
-                from flashml_spark.operators.binning import (
-                    binning_output_name,
-                    binning_specs_for_page,
-                )
-
-                scored = scored.drop(
-                    *[
-                        binning_output_name(s["variable"], k + 1)
-                        for s in binning_specs_for_page(c.binning, k)
-                    ]
-                )
             if sp:
                 sp.save(
                     scored.drop(*[col for col, t in scored.dtypes if t == "vector"]),
@@ -557,31 +589,7 @@ class Experiment:
                 )
             return scored, full_model, tuning_info
 
-        # Independent page models fit CONCURRENTLY from a small driver
-        # thread pool (guide §2.6 "overlap independent jobs"): each
-        # page's prep fit / model fit / savepoints touch only its own
-        # page{k} paths and frames, so later pages' jobs back-fill the
-        # cores an earlier page's straggling single-task stages leave
-        # idle.  Results are deterministic — every fit sees the exact
-        # frame (and partition layout) the sequential loop gave it; the
-        # pool only changes WHEN jobs run, not what they compute.
-        # 2-3 in flight is plenty (guide); page order is preserved by
-        # index.
-        page_args = list(enumerate(zip(train_pages, test_pages)))
-        if len(page_args) > 1:
-            import os as _os
-            from concurrent.futures import ThreadPoolExecutor
-
-            workers = min(
-                len(page_args),
-                int(_os.environ.get("SPARK_GRAFT_PAGE_THREADS", "4")),
-            )
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                results = list(
-                    pool.map(lambda a: _run_page(a[0], *a[1]), page_args)
-                )
-        else:
-            results = [_run_page(k, tr, te) for k, (tr, te) in page_args]
+        results = self._map_pages(_run_page, list(enumerate(zip(train_pages, test_pages))))
         scored_pages = [r[0] for r in results]
         self.models_ = [r[1] for r in results]
         self.tuning_ = [r[2] for r in results]
@@ -597,17 +605,7 @@ class Experiment:
         )
         self.metrics_ = multiclass_metrics(scored_all, label_col, "prediction")
         if not c.multi_intent and "probability" in scored_all.columns:
-            prob_type = dict(scored_all.dtypes)["probability"]
-            if prob_type == "vector":
-                from pyspark.ml.functions import vector_to_array
-
-                positive = vector_to_array("probability").getItem(1)
-            else:  # Platt/uplift emit array<double>
-                positive = F.element_at(F.col("probability"), 2)
-            binary = scored_all.select(
-                positive.alias("positive_probability"),
-                F.col(label_col).alias("label"),
-            )
+            binary = self._binary_scores(scored_all, label_col)
             self.metrics_["auroc"] = auroc(binary)
             self.metrics_["bestF2"] = best_fbeta_threshold(binary)
         if (
@@ -617,7 +615,7 @@ class Experiment:
             and "probability" in scored_all.columns
         ):
             self.metrics_["customMetrics"] = self._custom_metrics_rows(
-                scored_all, label_col
+                scored_all, scored_pages, label_col
             )
         if c.savepoint_root:
             from flashml_spark.metrics.report import MetricsAccumulator
@@ -640,63 +638,38 @@ class Experiment:
             data.unpersist()
         return self.metrics_
 
-    def _custom_metrics_rows(self, scored_all: DataFrame, label_col: str) -> list:
+    def _custom_metrics_rows(
+        self, scored_all: DataFrame, scored_pages: list[DataFrame], label_col: str
+    ) -> list:
         """The reference's custom-metrics step — journey-level hotlead
         rollup (``WebCustomMetricsEvaluator.scala:126-189``,
         ``totalVisitorsCount_test_config.json``): per page, the hotlead
         visitor count, global distinct-visitor and positive-visitor
         totals, hotleadRate and captureRate, with per-page probability
         thresholds taken from the config or (the reference's source)
-        each page's best-F2 sweep.  One row per page, reference column
-        names.  The rollup is two groupBys over the scored frame —
-        never the reference's per-visitor ``collect()``."""
+        each page's best-F2 sweep over that page model's own scored rows.
+        One row per page, reference column names.  The rollup is two
+        groupBys over the scored frame — never the reference's
+        per-visitor ``collect()``."""
         from flashml_spark.metrics.hotlead import hotlead_simulation
 
         c = self.config
         cm = c.custom_metrics
-        n_pages = c.num_pages if (c.page_col and c.num_pages > 1) else 1
-        prob_type = dict(scored_all.dtypes)["probability"]
-        if prob_type == "vector":
-            from pyspark.ml.functions import vector_to_array
-
-            positive = vector_to_array("probability").getItem(1)
-        else:
-            positive = F.element_at(F.col("probability"), 2)
+        n_pages = self.n_pages
+        positive = self._positive_probability(scored_all)
         page_col = c.page_col or "__cm_page"
         if not c.page_col:
             scored_all = scored_all.withColumn(page_col, F.lit(1))
 
         given = cm.get("probThresholds")
-
-        def _page_best_f2(k: int) -> dict:
-            page_rows = (
-                scored_all.filter(
-                    F.least(F.col(page_col).cast("int"), F.lit(n_pages)) == k + 1
-                )
-                if n_pages > 1
-                else scored_all
-            )
-            return best_fbeta_threshold(
-                page_rows.select(
-                    positive.alias("positive_probability"),
-                    F.col(label_col).alias("label"),
-                )
-            )
-
-        # per-page threshold sweeps are independent read-only actions over
-        # the same scored frame — overlap them (guide §2.6), same pool
-        # sizing as the page-fit loop
         if n_pages > 1:
-            import os as _os
-            from concurrent.futures import ThreadPoolExecutor
-
-            workers = min(
-                n_pages, int(_os.environ.get("SPARK_GRAFT_PAGE_THREADS", "4"))
+            # independent read-only sweeps, one per page frame: overlapped
+            best_f2 = self._map_pages(
+                lambda page: best_fbeta_threshold(self._binary_scores(page, label_col)),
+                scored_pages,
             )
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                best_f2 = list(pool.map(_page_best_f2, range(n_pages)))
-        else:
-            best_f2 = [_page_best_f2(0)]
+        else:  # the single page IS the union: reuse the standard sweep
+            best_f2 = [self.metrics_["bestF2"]]
         thresholds = [
             float(given[k]) if given else float(best_f2[k]["threshold"])
             for k in range(n_pages)
@@ -753,55 +726,32 @@ class Experiment:
         root = root or c.savepoint_root
         if root is None:
             raise ValueError("predict-only runs need savepoint_root")
-        n = c.num_pages if (c.page_col and c.num_pages > 1) else 1
         self.models_ = [
             PipelineModel.load(f"{root}/pipeline/page{k}/model_pipeline")
-            for k in range(n)
+            for k in range(self.n_pages)
         ]
         return self.models_
 
     def predict(self, spark: SparkSession, df: DataFrame) -> DataFrame:
         """Score new data with persisted models: read (labels optional) →
         page fan-out → per-page transform (the loaded pipeline includes the
-        model tail and any Platt calibrator) → the SAME post chain as
-        ``run`` (TopK, IndexToString, post-predict filter) — so predict-only
-        resume reproduces training-run scoring exactly
-        (``PipelineSteps.scala:73-78``)."""
+        model tail and any Platt calibrator) → the SAME scoring chain as
+        ``run`` (``_score_page``) — so predict-only resume reproduces
+        training-run scoring exactly (``PipelineSteps.scala:73-78``)."""
         c = self.config
         if not self.models_:
             self.load_models()
         data = self.read(df, require_response=False)
-        if c.page_col and c.num_pages > 1:
-            pages = relational.split_page_level(data, c.page_col, c.num_pages)
-        else:
-            pages = [data]
-
         scored_pages = []
-        for m, p in zip(self.models_, pages):
-            scored = m.transform(p)
-            labels = self._indexer_labels(m)
-            if c.uplift_treatment:
-                from flashml_spark.training.platt import PlattScalarModel
-                from flashml_spark.training.postprocess import uplift_transform
-
-                # the bare classifier stage: last stage, or the one before
-                # the Platt calibrator when the tail is calibrated (the
-                # calibrator is then ALSO the margin->probability map the
-                # counterfactual scorings need)
-                stages = list(m.stages)
-                if isinstance(stages[-1], PlattScalarModel):
-                    model_stage, cal = stages[-2], stages[-1]
-                else:
-                    model_stage, cal = stages[-1], None
-                scored = uplift_transform(scored, model_stage, calibrator=cal)
-            if c.top_k and labels:
-                from flashml_spark.training.postprocess import top_k_intents
-
-                scored = top_k_intents(scored, labels, k=c.top_k)
-            if labels:
-                from flashml_spark.training.postprocess import index_to_string
-
-                scored = index_to_string(scored, labels)
-            scored_pages.append(scored)
-        scored = relational.union_pages(scored_pages)
-        return relational.post_predict_filter(scored, c.post_predict_filter)
+        for k, (m, page) in enumerate(zip(self.models_, self._split_pages(data))):
+            stages = m.stages
+            if c.response not in page.columns:
+                # unlabelled input: the fitted response indexer would still
+                # resolve the response column (handleInvalid="skip" filters
+                # on it), so it does not run
+                stages = [
+                    s for s in stages
+                    if not (isinstance(s, StringIndexerModel) and s.getInputCol() == c.response)
+                ]
+            scored_pages.append(self._score_page(k, PipelineModel(stages).transform(page), m))
+        return relational.union_pages(scored_pages)

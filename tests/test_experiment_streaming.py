@@ -520,16 +520,25 @@ def test_experiment_uplift(spark):
     assert len(exp.models_) == 1
 
 
-def test_experiment_predict_only_resume(spark, tmp_path):
+@pytest.mark.parametrize(
+    "binning",
+    [[], [{"variable": "dwell", "type": "equidistant", "buckets": 3}]],
+    ids=["plain", "binned"],
+)
+def test_experiment_predict_only_resume(spark, tmp_path, binning):
     """Train with savepoints, then a FRESH Experiment scores unlabeled data
-    from the persisted per-page models without refitting (SURVEY §3.2)."""
+    from the persisted per-page models without refitting (SURVEY §3.2),
+    and scores the run's own test split exactly as the run did — also with
+    page-qualified binned columns, which must not reach the page union."""
     from flashml_spark.experiment import Experiment, ExperimentConfig
+    from flashml_spark.sources.savepoint import SavepointManager
 
     root = str(tmp_path / "sp")
     cfg = ExperimentConfig(
         primary_keys=["session_id"], response="response", text_cols=["text"],
+        numerical_cols=["dwell"], binning=binning,
         text_method="hashingtf", slots=32,
-        algorithm="logistic_regression", algo_params={"maxIter": 5},
+        algorithm="svm", algo_params={"maxIter": 5},
         page_col="page", num_pages=2, savepoint_root=root,
     )
     Experiment(cfg).run(spark, _journey_df(spark, 200))
@@ -540,6 +549,65 @@ def test_experiment_predict_only_resume(spark, tmp_path):
     assert scored.count() == 60
     assert "prediction" in scored.columns
     assert len(fresh.models_) == 2
+
+    # predict on the run's test split reproduces the run's scored rows
+    # (Platt probabilities are array<double>, so the savepoint keeps them)
+    sp = SavepointManager(spark, root)
+
+    def rows(df):
+        return sorted(
+            tuple(r) for r in df.select("session_id", "prediction", "probability").collect()
+        )
+
+    run_scored = [r for k in range(2) for r in rows(sp.load("scoring", "test", page=k))]
+    assert run_scored
+    assert rows(fresh.predict(spark, sp.load("sampling", "test"))) == sorted(run_scored)
+
+
+def test_custom_metrics_page_threshold_sweeps_page_model_rows(spark):
+    """Rows with page 0 fit and score in page 1's model (split_page_level
+    clamps pages below 1 into the first model), so page 1's custom-metrics
+    best-F2 threshold must come from the sweep over page 1's own scored
+    rows, page-0 rows included.  The page-0 rows here are ambiguous (half
+    converted), so including them moves the best-F2 threshold."""
+    from pyspark.ml.functions import vector_to_array
+
+    from flashml_spark.metrics.binary import best_fbeta_threshold
+
+    rows = []
+    for i in range(300):
+        page = i % 3  # pages 0, 1, 2
+        if page == 0:
+            good = (i // 3) % 2 == 0
+            text = "hello there"
+        else:
+            good = i % 2 == 0
+            text = "buy now great deal" if good else "just browsing around here"
+        rows.append((f"{i:08x}", page, text, "1" if good else "0"))
+    df = spark.createDataFrame(rows, ["session_id", "page", "text", "response"])
+    cfg = ExperimentConfig(
+        primary_keys=["session_id"], response="response", text_cols=["text"],
+        text_method="hashingtf", slots=32, algo_params={"maxIter": 10},
+        page_col="page", num_pages=2, train_fraction=0.7,
+        custom_metrics={"type": "prob_only"},
+    )
+    exp = Experiment(cfg)
+    metrics = exp.run(spark, df)
+
+    _, test = exp.split(exp.read(df))
+    page1 = test.filter(F.col("page") <= 1)
+    assert page1.filter(F.col("page") == 0).count() > 0
+    scored = exp.models_[0].transform(page1)
+    want = best_fbeta_threshold(
+        scored.select(
+            vector_to_array("probability")[1].alias("positive_probability"),
+            F.col("response_indexed").alias("label"),
+        )
+    )
+    row = metrics["customMetrics"][0]
+    assert row["pageNo"] == 1
+    assert row["probThreshold"] == want["threshold"]
+    assert row["bestF2"] == want["fbeta"]
 
 
 def test_streaming_sliding_window_matches_batch(spark, tmp_path):
@@ -676,6 +744,13 @@ def test_multi_intent_svm_pipeline_roundtrip(spark, tmp_path):
     scored = fresh.predict(spark, df)
     assert rowmap(scored) == in_mem
     assert "topKIntents" in scored.columns  # TopK post chain applied
+
+    # unlabelled input: the response indexer is left out, the rest of the
+    # scoring chain (TopK, IndexToString) runs as for labelled input
+    unlabelled = Experiment(cfg).predict(spark, df.drop("intent"))
+    assert unlabelled.count() == 240
+    assert {"topKIntents", "prediction_label"} <= set(unlabelled.columns)
+    assert rowmap(unlabelled) == rowmap(scored)
 
     # FRESH-SESSION reload: a separate interpreter + JVM loads the saved
     # pipeline and must reproduce identical predictions
